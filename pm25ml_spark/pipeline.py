@@ -76,11 +76,7 @@ class Pm25Pipeline:
         exact output row count (grid × distinct dates), validated against
         the write-observed count."""
         grid_pdf = self.grid.select("grid_id", "lon", "lat").toPandas()
-        # persist the decoded long rows: the write plan reads them through
-        # TWO join branches (pivot side + scaffold side) — without the
-        # cache the granule decode (the heaviest I/O of the pipeline)
-        # executes once per branch
-        long_rows = read_granules_to_grid(self.spark, granules, grid_pdf).persist()
+        long_rows = read_granules_to_grid(self.spark, granules, grid_pdf)
         # pivot values come from the manifest, not a discovery scan: the
         # variables present in the decoded rows are exactly the manifest's
         # (every granule emits its own variable), and passing them
@@ -92,14 +88,16 @@ class Pm25Pipeline:
             .pivot("variable", variables)
             .agg(F.first("value"))
         )
-        dates = long_rows.select("date").distinct()
-        scaffold = self.grid.select("grid_id").crossJoin(dates)
+        # the scaffold's dates come from the manifest too (every granule
+        # emits rows for its own date), so the decode has one consumer
+        dates = sorted({g.date for g in granules})
+        scaffold = self.grid.select("grid_id").crossJoin(
+            self.spark.createDataFrame([(d,) for d in dates], "date string")
+        )
         complete = scaffold_complete(per_var, scaffold, id_cols=("grid_id", "date"))
         out = complete.withColumn("month", F.substring("date", 1, 7))
         n = self.store.sink_stage(out, "ingested")
-        expected = self.grid.count() * dates.count()
-        long_rows.unpersist()
-        self._validate_rows("ingested", n, expected)
+        self._validate_rows("ingested", n, len(grid_pdf) * len(dates))
 
     # -- stage 2: combine ---------------------------------------------------
     def combine(self, datasets: dict[str, DataFrame]) -> None:

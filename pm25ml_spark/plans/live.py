@@ -634,16 +634,16 @@ def mm03_audio_loudness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# st04 — CUSTOM stateful operator (applyInPandasWithState), oracle-
-# checked across real micro-batch boundaries: the events table is staged
-# as two chronological halves (two micro-batches), so roughly every
-# user's state is built up across batches, not within one. The kernel
-# carries integer-exact accumulators (count + event_id checksum) in the
-# state store and re-emits a user's running totals each batch it appears
-# in (update mode); totals are strictly increasing, so the FINAL value
-# per user is the max — selected batch-side with a max-struct aggregate.
-# The oracle is the plain per-user aggregate: equality proves the state
-# store accumulated every batch exactly once.
+# st04 — stateful per-user totals as a built-in update-mode streaming
+# aggregation, oracle-checked across real micro-batch boundaries: the
+# events table is staged as two chronological halves (two micro-batches),
+# so roughly every user's state is built up across batches. The state
+# store holds integer-exact accumulators (count + event_id checksum) and
+# re-emits a user's running totals each batch it appears in (update
+# mode); totals are strictly increasing, so the FINAL value per user is
+# the max — selected batch-side with a max-struct aggregate. The oracle
+# is the plain per-user aggregate: equality proves the state store
+# accumulated every batch exactly once.
 def _stage_chronological_halves(
     spark, sf_dir: str, prefix: str, event_types: tuple | None = None
 ) -> str:

@@ -7,9 +7,9 @@ is a stringified ``{'longitude': .., 'latitude': ..}`` dict.
 
 Spark-first shape: the URL list is a *manifest DataFrame* and each URL is
 fetched and parsed inside a ``mapInPandas`` task — the fetch fans out
-across executors (one month-file per task, the reference's own unit of
-work), rows land partitioned, and nothing funnels through the driver. At
-1000 executors the fetch is bandwidth-bound, not driver-bound.
+across executors (one task per core, each looping over its month-files),
+rows land partitioned, and nothing funnels through the driver. At 1000
+executors the fetch is bandwidth-bound, not driver-bound.
 
 Fetching uses stdlib ``urllib`` only, with bounded retries; ``file://``
 URLs work identically (tests exercise a real local HTTP server AND file
@@ -74,20 +74,20 @@ def read_csv_urls(
     *,
     timeout_s: float = 60.0,
     retries: int = 2,
-    max_tasks: int = 64,
 ) -> DataFrame:
-    """Distributed CSV-over-HTTP reader: one URL per task, declared schema
-    (header row is matched by name, surplus columns dropped, missing ones
-    null) so the result is stable regardless of server column order."""
+    """Distributed CSV-over-HTTP reader: one task per core (at most one
+    per URL), each looping over its URLs; declared schema (header row is
+    matched by name, surplus columns dropped, missing ones null) so the
+    result is stable regardless of server column order."""
     target = (
         schema
         if isinstance(schema, StructType)
         else spark.createDataFrame([], schema).schema
     )
     names = [f.name for f in target.fields]
-    manifest = spark.createDataFrame(
-        [(u,) for u in urls], "url string"
-    ).repartition(max(1, min(len(urls), max_tasks)))
+    manifest = spark.createDataFrame([(u,) for u in urls], "url string").coalesce(
+        max(1, min(len(urls), spark.sparkContext.defaultParallelism))
+    )
 
     def fn(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -5,7 +5,7 @@ xarray/h5netcdf, bbox-subset, time-averaged to a day grid, then regridded
 to the 33k grid centroids (`collectors/ned/*`). Spark-first shape:
 
     granule manifest DataFrame (path, date, variable)
-      → mapInPandas(reader_udf)           # one granule per task
+      → mapInPandas(reader_udf)           # one task per core, a loop of granules
       → long rows (grid_id, date, value)
       → scaffold completion + archive write
 
@@ -223,8 +223,9 @@ def read_granules_to_grid(
     grid_pdf: pd.DataFrame,  # columns: grid_id, lon, lat (33k rows — broadcastable)
 ) -> DataFrame:
     """Distributed granule reader: one manifest row per granule, decoded
-    and regridded inside mapInPandas (one task per granule, matching the
-    reference's file-per-day unit of work)."""
+    and regridded inside mapInPandas by one task per core (at most one per
+    granule, no exchange): a Python task's fixed worker cost dwarfs one
+    granule's decode, so each task loops over its share of the manifest."""
     manifest = spark.createDataFrame(
         [
             (
@@ -238,7 +239,7 @@ def read_granules_to_grid(
         ],
         "path string, date string, variable string, "
         "bbox array<double>, level int",
-    ).repartition(max(1, min(len(granules), 64)))
+    ).coalesce(max(1, min(len(granules), spark.sparkContext.defaultParallelism)))
 
     g_ids = grid_pdf["grid_id"].to_numpy()
     g_lon = grid_pdf["lon"].to_numpy(dtype=np.float64)

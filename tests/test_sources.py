@@ -15,6 +15,7 @@ from pm25ml_spark.sources.multimodal import (
 from pm25ml_spark.sources.raster import (
     RasterGranule,
     bilinear_regrid,
+    decode_granule,
     read_granules_to_grid,
 )
 
@@ -59,6 +60,45 @@ def test_read_granules_distributed(spark):
     a = pdf.sort_values(["date", "grid_id"]).value.to_numpy()
     b = pdf2.sort_values(["date", "grid_id"]).value.to_numpy()
     assert np.array_equal(a, b)
+
+
+def test_read_granules_one_task_per_core(spark):
+    """Each Python task pays a fixed worker cost far above one granule's
+    decode, so the reader runs one task per core that loops over its
+    granules: no exchange spreads the manifest one granule per task, no
+    more tasks start than there are granules, and every granule is still
+    decoded exactly as on its own."""
+    cores = spark.sparkContext.defaultParallelism
+    grid_pdf = pd.DataFrame(
+        {
+            "grid_id": np.arange(12, dtype=np.int64),
+            "lon": np.linspace(62.0, 97.0, 12),
+            "lat": np.linspace(6.0, 38.0, 12),
+        }
+    )
+    many = [
+        RasterGranule(
+            f"fake://merra/{i}.nc", f"2023-{1 + i // 28:02d}-{1 + i % 28:02d}", "t2m"
+        )
+        for i in range(3 * cores + 1)
+    ]
+    out = read_granules_to_grid(spark, many, grid_pdf)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan.split("MapInPandas", 1)[1], plan
+    assert out.rdd.getNumPartitions() <= cores
+    pdf = out.toPandas()
+    assert len(pdf) == len(many) * len(grid_pdf)
+    for g in many:
+        got = pdf[pdf.date == g.date].sort_values("grid_id")["value"].to_numpy()
+        want = bilinear_regrid(
+            *decode_granule(g.path, g.variable),
+            grid_pdf["lon"].to_numpy(),
+            grid_pdf["lat"].to_numpy(),
+        )
+        assert np.array_equal(got, want), g
+    # fewer granules than cores: no task beyond one per granule
+    few = many[: max(1, cores // 2)]
+    assert read_granules_to_grid(spark, few, grid_pdf).rdd.getNumPartitions() == len(few)
 
 
 def test_media_features(spark):
